@@ -3,8 +3,8 @@ xh_lsh_recall_eval (queries/dedup_oracle.py) was built for: pick the
 production (bands, rows) from DATA, not from the S-curve rule of thumb.
 
 For each configuration the candidate stage runs with the production
-machinery (operators/dedup.py: same RandomState(42) permutations, same
-band-key equi join) over an audit subset of the sf0.1 documents, and is
+machinery (operators/dedup.py: exact mod-(2^61-1) signatures from the
+same RandomState(42) permutations, the exact band-value equi join) over an audit subset of the sf0.1 documents, and is
 scored against the EXACT Jaccard >= 0.7 pair set:
 
   recall    — tp / |exact pairs|: the number that matters at 100 TB,
@@ -47,7 +47,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from hadoop_copier_spark.operators.dedup import (  # noqa: E402
     lsh_candidate_pairs,
     minhash_signature,
+    overlap_pairs,
     shingle_hashes,
+    verify_jaccard,
 )
 from hadoop_copier_spark.session import get_spark  # noqa: E402
 
@@ -58,33 +60,6 @@ RECALL_FLOOR = 0.999
 # verdict asked for, plus the 32-perm family containing the current
 # production config (8 bands x r=4, operators/dedup.py defaults).
 CONFIGS = [(2, 8), (4, 4), (8, 2), (4, 8), (8, 4), (16, 2)]
-
-
-def exact_pairs(hashed):
-    """Exact Jaccard >= 0.7 pair set via the inverted shingle index —
-    integer cross-multiplied threshold (10*inter >= 7*union), the
-    xh_lsh_recall_eval spelling."""
-    inv = hashed.select("doc_id", F.explode("__shingle_hashes").alias("h"))
-    ia, ib = inv.alias("ia"), inv.alias("ib")
-    touch = (
-        ia.join(
-            ib,
-            (F.col("ia.h") == F.col("ib.h"))
-            & (F.col("ia.doc_id") < F.col("ib.doc_id")),
-        )
-        .select(F.col("ia.doc_id").alias("id_a"), F.col("ib.doc_id").alias("id_b"))
-        .distinct()
-    )
-    x = hashed.select(F.col("doc_id").alias("id_a"), F.col("__shingle_hashes").alias("__ha"))
-    y = hashed.select(F.col("doc_id").alias("id_b"), F.col("__shingle_hashes").alias("__hb"))
-    inter = F.size(F.array_intersect(F.col("__ha"), F.col("__hb")))
-    union_ = F.size("__ha") + F.size("__hb") - inter
-    return (
-        touch.join(x, "id_a")
-        .join(y, "id_b")
-        .filter(F.lit(10) * inter >= F.lit(7) * union_)
-        .select("id_a", "id_b")
-    )
 
 
 def main() -> None:
@@ -101,14 +76,18 @@ def main() -> None:
     )
     n_docs = hashed.count()
     t0 = time.monotonic()
-    truth = exact_pairs(hashed).localCheckpoint(eager=True)
+    truth = (
+        verify_jaccard(overlap_pairs(hashed, "doc_id"), hashed, "doc_id", 0.7)
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True)
+    )
     n_exact = truth.count()
     exact_sec = round(time.monotonic() - t0, 3)
 
     sigs_by_k, sig_sec_by_k = {}, {}
     for k in sorted({b * r for b, r in CONFIGS}):
         t0 = time.monotonic()
-        sigs_by_k[k] = minhash_signature(hashed, k=k).localCheckpoint(eager=True)
+        sigs_by_k[k] = minhash_signature(hashed, "doc_id", k=k).localCheckpoint(eager=True)
         sig_sec_by_k[k] = round(time.monotonic() - t0, 3)
 
     rows = []

@@ -20,13 +20,23 @@ _STOPWORDS = {
 }
 
 
-def _tokens(text: Column) -> Column:
+def word_tokens(text: Column) -> Column:
+    """Lowercased whitespace tokens with empties dropped — the one
+    tokenization the dedup operators, their DuckDB oracles and the text
+    scores share."""
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
+
+
+def h60(col: Column) -> Column:
+    """Portable 60-bit hash: int(md5(s)[0:15], 16). md5 is bit-identical in
+    every engine and 15 hex digits fit BIGINT, so DuckDB reproduces it as
+    ``('0x' || substr(md5(s), 1, 15))::BIGINT``."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def whitespace_token_count(text: Column) -> Column:
     """Token count by whitespace splitting."""
-    return F.size(_tokens(text))
+    return F.size(word_tokens(text))
 
 
 def bpe_ish_token_count(text: Column) -> Column:
@@ -38,7 +48,7 @@ def bpe_ish_token_count(text: Column) -> Column:
 def lang_id_guess(text: Column) -> Column:
     """Heuristic language ID: argmax over stopword-profile hit counts
     (deterministic tiebreak by language code; 'und' when nothing hits)."""
-    toks = _tokens(text)
+    toks = word_tokens(text)
     scores = [
         F.struct(
             F.size(F.array_intersect(F.array_distinct(toks), F.array(*[F.lit(w) for w in words]))).alias("hits"),
@@ -56,7 +66,7 @@ def quality_score(text: Column) -> Column:
     """Composite [0,1] quality score from length, punctuation ratio,
     stopword ratio and mean word length (decimal-rounded, deterministic)."""
     n_chars = F.length(text)
-    toks = _tokens(text)
+    toks = word_tokens(text)
     n_toks = F.size(toks)
     punct = F.length(F.regexp_replace(text, r"[a-zA-Z0-9\s]", ""))
     punct_ratio = punct.cast("double") / F.greatest(n_chars, F.lit(1)).cast("double")
@@ -78,7 +88,7 @@ def doc_fingerprint(text: Column) -> Column:
     """Order-sensitive rolling fingerprint: polynomial combination of token
     hashes (base 31, modular — bounded so ANSI mode never sees a long
     overflow; deterministic JVM-side)."""
-    toks = _tokens(text)
+    toks = word_tokens(text)
     hashed = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(1 << 40)))
     return F.aggregate(
         hashed,

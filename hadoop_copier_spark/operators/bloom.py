@@ -36,14 +36,11 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import h60 as _h60
+
 __all__ = ["bloom_build", "bloom_probe", "bloom_position_sql"]
 
 _WORD = 32  # bits packed per BIGINT word (avoids sign-bit portability)
-
-
-def _h60(col: Column) -> Column:
-    """Portable 60-bit hash — same construction as queries/dedup_oracle."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def _position(key: Column, i: int, m_bits: int) -> Column:

@@ -1,32 +1,54 @@
 """Near-duplicate detection operators (SURVEY §2b P-class: MinHash+LSH,
 SimHash, n-gram Jaccard).
 
-Pipeline (the standard web-scale near-dup design):
-  shingle (word n-grams, JVM higher-order fns)
-  -> xxhash64 per shingle (JVM)
-  -> MinHash signature (vectorized pandas_udf over Arrow — numpy uint64
-     affine permutations, deterministic fixed parameters)
-  -> LSH banding: explode (band_id, band_hash), shuffle once on the band
-     key, self-join inside buckets -> candidate pairs
-  -> exact Jaccard verification on the shingle-hash arrays (JVM
-     array_intersect/array_union)
+MinHash-LSH pipeline (the standard web-scale near-dup design), one
+implementation shared by production and the DuckDB-checked oracle twins
+(queries/dedup_oracle.py):
+  shingle_hashes       word n-grams of ``word_tokens`` (lowercased, split
+                       on \\s+, empties dropped; a doc shorter than n
+                       tokens is one shingle, its joined tokens), hashed by
+                       the caller's ``hash_fn`` — xxhash64 in production,
+                       the portable md5-derived h60 in the twins
+  minhash_signature    slot i = min over the doc's shingle hashes h of
+                       (a_i·h + b_i) mod (2^61 − 1), exact: h is read as a
+                       signed 64-bit integer and reduced into [0, p)
+                       first, then the multiply is split into 31-bit
+                       halves whose high terms fold by the Mersenne
+                       identity 2^61 ≡ 1 (mod p), so every intermediate
+                       stays below 2^63 — plain JVM long arithmetic,
+                       codegen'd
+  lsh_candidate_pairs  band b keys on the exact r = k/bands signature
+                       values of slots [b·r, (b+1)·r); docs equal on every
+                       value of any band are candidates (id_a < id_b)
+  verify_jaccard       exact integer Jaccard test on the shingle-hash sets:
+                       den·|A∩B| >= num·|A∪B| for threshold = num/den
 
-At 100 TB: the only all-to-all step is the band-hash shuffle, which is
-uniform by construction; candidate verification joins back to shingle
-arrays co-partitioned by doc_id. Signature width k and band count trade
-recall vs candidate volume (k=32, bands=8 -> r=4: catches Jaccard >~0.7).
+At 100 TB: the signature is an explode + per-id min aggregate whose
+map-side partial aggregation ships at most one k-long row per id and
+input partition; the only all-to-all step over pairs is the band-key
+shuffle, which is uniform by construction, and the verify join reads the
+shingle arrays by id. Signature width k and band count trade recall vs candidate
+volume (k=32, bands=8 -> r=4; measured in bench/lsh_tuning_results.json).
 """
 
 from __future__ import annotations
 
+from fractions import Fraction
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.text import word_tokens
+
 _MERSENNE = (1 << 61) - 1
+_LO31 = (1 << 31) - 1
+_LO30 = (1 << 30) - 1
+_HASHES = "__shingle_hashes"
 
 
 def _minhash_params(k: int, seed: int = 42):
@@ -36,70 +58,136 @@ def _minhash_params(k: int, seed: int = 42):
     return a, b
 
 
-def shingle_hashes(df: DataFrame, text_col: str, n: int = 3) -> DataFrame:
-    """Add __shingle_hashes: distinct xxhash64 of word n-grams (JVM-side).
+def shingle_hashes(
+    df: DataFrame, text_col: str, n: int = 3, hash_fn=F.xxhash64
+) -> DataFrame:
+    """Add __shingle_hashes: the distinct ``hash_fn`` values (Column ->
+    Column: xxhash64 in production, the portable h60 in the oracle twins)
+    of the word n-grams of ``text_col`` (JVM-side; NULL text gives NULL).
 
-    The token array is materialized as a real column first: referencing an
-    inline split() expression from inside the transform lambda makes
-    Catalyst re-evaluate the split for every element_at — measured 10x+
-    slowdown on long documents."""
-    with_toks = df.withColumn("__toks", F.split(F.lower(F.col(text_col)), r"\s+"))
+    The token and n-gram arrays are real columns before their lambda
+    consumers: an inline split() referenced from inside the transform
+    lambda makes Catalyst re-evaluate the split for every element_at —
+    measured 10x+ slowdown on long documents."""
     toks = F.col("__toks")
-    grams = F.when(F.size(toks) < n, F.array(F.lower(F.col(text_col)))).otherwise(
+    grams = F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks))).otherwise(
         F.transform(
             F.sequence(F.lit(1), F.size(toks) - (n - 1)),
             lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
         )
     )
-    hashed = F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
-    return with_toks.withColumn("__shingle_hashes", hashed).drop("__toks")
+    return (
+        df.withColumn("__toks", word_tokens(F.col(text_col)))
+        .withColumn("__grams", grams)
+        .withColumn(_HASHES, F.array_distinct(F.transform(F.col("__grams"), lambda g: hash_fn(g))))
+        .drop("__toks", "__grams")
+    )
 
 
-def minhash_signature(df: DataFrame, k: int = 32, seed: int = 42) -> DataFrame:
-    """Add __sig: k-wide MinHash signature via a vectorized pandas UDF.
+def _mod_affine(hi: Column, lo: Column, a: int, b: int) -> Column:
+    """(a·h + b) mod p for h = hi·2^31 + lo in [0, p), a, b in [0, p).
 
-    numpy uint64 affine permutations mod a Mersenne prime — exact modular
-    arithmetic (no Java long overflow), Arrow-batched, deterministic.
-    """
+    With a = a_hi·2^31 + a_lo (a_hi < 2^30, a_lo < 2^31):
+      a·h = a_hi·hi·2^62 + m·2^31 + a_lo·lo,  m = a_hi·lo + a_lo·hi < 2^62
+    and 2^62 ≡ 2, m·2^31 ≡ (m >> 30) + (m mod 2^30)·2^31 (mod p). The two
+    partial sums are < 2^61 + 2^62 + 2^32 and < 3·2^61, both below 2^63,
+    and each is reduced with one long remainder. The expression tree is
+    kept small on purpose (m is the only repeated subtree): Catalyst
+    plans, and AQE re-plans, k copies of it."""
+    a_hi, a_lo = a >> 31, a & _LO31
+    mid = hi * a_lo + lo * a_hi
+    x = (hi * (2 * a_hi) + lo * a_lo + F.shiftright(mid, 30)) % _MERSENNE
+    return (x + F.shiftleft(mid.bitwiseAND(_LO30), 31) + F.lit(b)) % _MERSENNE
+
+
+def minhash_signature(
+    df: DataFrame, id_col: str, k: int = 32, seed: int = 42
+) -> DataFrame:
+    """(id_col, __s0 .. __s{k-1}): the k-slot MinHash signature of each
+    id's __shingle_hashes,
+
+        __s_i = min over h of (a_i·h + b_i) mod (2^61 − 1)
+
+    with (a_i, b_i) drawn from RandomState(seed) and h the signed 64-bit
+    hash value (reduced mathematically, so negative hashes land in
+    [0, p) — Python's ``%``). Computed exactly in JVM long arithmetic
+    (``_mod_affine``: every intermediate < 2^63): explode the hashes,
+    one scalar codegen'd column per slot under groupBy(id).agg(min) — not
+    a per-array lambda, which Spark interprets instead of generating code.
+    Ids with an empty or NULL hash array have no signature row."""
     a, b = _minhash_params(k, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig_udf(hashes: pd.Series) -> pd.Series:
-        out = []
-        for hs in hashes:
-            h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-            if h.size == 0:
-                out.append([0] * k)
-                continue
-            # (a*h + b) mod p for each of k permutations, then min
-            m = (a[:, None] * h[None, :] + b[:, None]) % np.uint64(_MERSENNE)
-            out.append(m.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return df.withColumn("__sig", sig_udf(F.col("__shingle_hashes")))
+    h = F.pmod(F.col("__h"), F.lit(_MERSENNE))
+    ex = df.select(id_col, F.explode(_HASHES).alias("__h")).select(
+        id_col, F.shiftright(h, 31).alias("__hi"), h.bitwiseAND(_LO31).alias("__lo")
+    )
+    hi, lo = F.col("__hi"), F.col("__lo")
+    return ex.groupBy(id_col).agg(
+        *[F.min(_mod_affine(hi, lo, int(a[i]), int(b[i]))).alias(f"__s{i}") for i in range(k)]
+    )
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str, bands: int = 8, k: int = 32) -> DataFrame:
-    """Explode signatures into (band_id, band_hash) keys; docs sharing any
-    band bucket become candidate pairs (id_a < id_b)."""
+    """Explode signatures into one row per (id, band) carrying the band's
+    r = k // bands slot values; docs equal on band id and all r values of
+    any band become candidate pairs (id_a, id_b), id_a < id_b."""
     r = k // bands
-    sig = F.col("__sig")
-    band_keys = F.array(*[F.hash(F.slice(sig, b * r + 1, r), F.lit(b)) for b in range(bands)])
     band_rows = sig_df.select(
-        F.col(id_col),
-        F.posexplode(band_keys).alias("band_id", "band_hash"),
-    )
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
+        id_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        *[F.col(f"__s{b * r + j}").alias(f"v{j}") for j in range(r)],
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("__bd"),
+    ).select(id_col, "__bd.*")
+    a, b = band_rows.alias("a"), band_rows.alias("b")
+    same = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in ["band"] + [f"v{j}" for j in range(r)]]
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        a.join(b, reduce(lambda x, y: x & y, same) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
+    )
+
+
+def overlap_pairs(sets: DataFrame, id_col: str, directed: bool = False) -> DataFrame:
+    """Distinct (id_a, id_b) pairs whose __shingle_hashes share >= 1 value,
+    id_a < id_b (id_a != id_b when ``directed``) — the inverted-index equi
+    join that yields every pair at Jaccard or containment > 0 without a
+    cross join; the exact reference set the LSH candidates are audited
+    against."""
+    inv = sets.select(id_col, F.explode(_HASHES).alias("__h"))
+    a, b = inv.alias("a"), inv.alias("b")
+    ida, idb = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    return (
+        a.join(b, (F.col("a.__h") == F.col("b.__h")) & ((ida != idb) if directed else (ida < idb)))
+        .select(ida.alias("id_a"), idb.alias("id_b"))
+        .distinct()
+    )
+
+
+def verify_jaccard(
+    pairs: DataFrame, sets: DataFrame, id_col: str, threshold: float = 0.7
+) -> DataFrame:
+    """(id_a, id_b, inter_n, union_n) for the ``pairs`` whose shingle-hash
+    sets (``sets``: id_col, __shingle_hashes; distinct arrays) have exact
+    Jaccard >= threshold. The test is integer: threshold is read as the
+    fraction num/den of its decimal spelling (0.7 -> 7/10) and a pair
+    passes iff den·inter >= num·union."""
+    num, den = Fraction(str(threshold)).as_integer_ratio()
+    x = sets.select(F.col(id_col).alias("id_a"), F.col(_HASHES).alias("__ha"))
+    y = sets.select(F.col(id_col).alias("id_b"), F.col(_HASHES).alias("__hb"))
+    inter = F.size(F.array_intersect(F.col("__ha"), F.col("__hb")))
+    union_ = F.size("__ha") + F.size("__hb") - inter
+    return (
+        pairs.join(x, "id_a")
+        .join(y, "id_b")
+        .filter(F.lit(den) * inter >= F.lit(num) * union_)
+        .select("id_a", "id_b", inter.alias("inter_n"), union_.alias("union_n"))
     )
 
 
@@ -112,8 +200,8 @@ def near_dup_pairs(
     k: int = 32,
     bands: int = 8,
 ) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: returns (id_a, id_b, jaccard)
-    for pairs with exact shingle-Jaccard >= threshold.
+    """Full MinHash-LSH near-dup pipeline over xxhash64 shingles: returns
+    (id_a, id_b, jaccard) for pairs with exact shingle-Jaccard >= threshold.
 
     NULL text rows are dropped: a content-less doc has no shingles and
     therefore no content to near-dup against (and at 100 TB corrupt rows
@@ -122,22 +210,12 @@ def near_dup_pairs(
     # shingle hashes feed three consumers (signature + both sides of the
     # verify join) — persist so the text is shingled once, not three times
     hashed = shingle_hashes(df.select(id_col, text_col), text_col, n=n).select(
-        id_col, "__shingle_hashes"
+        id_col, _HASHES
     ).persist()
-    sigs = minhash_signature(hashed, k=k)
+    sigs = minhash_signature(hashed, id_col, k=k)
     cands = lsh_candidate_pairs(sigs, id_col, bands=bands, k=k)
-    sets_ = hashed.select(F.col(id_col), F.col("__shingle_hashes"))
-    ja = sets_.withColumnRenamed(id_col, "id_a").withColumnRenamed("__shingle_hashes", "__ha")
-    jb = sets_.withColumnRenamed(id_col, "id_b").withColumnRenamed("__shingle_hashes", "__hb")
-    jac = (
-        F.size(F.array_intersect(F.col("__ha"), F.col("__hb"))).cast("double")
-        / F.size(F.array_union(F.col("__ha"), F.col("__hb"))).cast("double")
-    )
-    pairs = (
-        cands.join(ja, "id_a")
-        .join(jb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    pairs = verify_jaccard(cands, hashed, id_col, threshold).select(
+        "id_a", "id_b", (F.col("inter_n") / F.col("union_n")).alias("jaccard")
     )
     # materialize the (small) pair set eagerly so the shingle cache can be
     # released NOW instead of leaking until session end (ADVICE round 1);
@@ -201,10 +279,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     in queries/dedup_oracle.py keeps its md5-derived Column arithmetic —
     independent implementation by design, so their constants differ.)"""
 
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != F.lit("")
-    )
-    token_hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    token_hashes = F.transform(word_tokens(F.col(text_col)), lambda t: F.xxhash64(t))
 
     @F.pandas_udf(T.LongType())
     def vote_udf(hashes: pd.Series) -> pd.Series:

@@ -15,6 +15,7 @@ from .base import (
     cents,
     cents_sum,
     det_avg,
+    hash_sample_by,
     ocents,
     ocents_sum,
     odet_avg,
@@ -399,12 +400,14 @@ def h_unpivot(spark, sf_dir):
 
 @register("xp_stratified_sample", oracle=None, tags=("llm", "sampling"))
 def p_stratified_sample(spark, sf_dir):
-    """P-class: seeded stratified sampling per language (sampleBy) — the
-    training-data rebalancing primitive. Deterministic for a fixed seed and
-    input layout; tests assert per-stratum rates within tolerance."""
+    """P-class: seeded stratified sampling per language — the
+    training-data rebalancing primitive. A hash-threshold sample on doc_id
+    (base.hash_sample_by), so the result is a pure function of the rows:
+    identical on every run and layout; tests assert per-stratum rates
+    within tolerance."""
     d = tbl(spark, sf_dir, "documents")
     fractions = {"en": 0.5, "de": 0.5, "es": 0.2, "fr": 0.2, "zh": 0.1}
-    sampled = d.sampleBy("lang", fractions, seed=42)
+    sampled = hash_sample_by(d, "lang", fractions, key="doc_id", seed=42)
     return (
         sampled.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_sampled"))

@@ -82,6 +82,22 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def hash_sample_by(
+    df: DataFrame, col: str, fractions: dict, key: str, seed: int
+) -> DataFrame:
+    """Stratified sample that is a pure function of each row: keep a row
+    iff xxhash64(key, seed) mod 2^32 < fraction·2^32 for its stratum
+    ``col`` (strata missing from ``fractions`` keep nothing, as in
+    sampleBy). DataFrame.sampleBy draws per-row randoms in row order, so
+    its kept set changes with the physical layout; this one is identical
+    under any partitioning, on every run."""
+    thr = None
+    for stratum, frac in fractions.items():
+        thr = (F if thr is None else thr).when(F.col(col) == stratum, int(frac * (1 << 32)))
+    u = F.xxhash64(F.col(key), F.lit(seed)).bitwiseAND((1 << 32) - 1)
+    return df.filter(u < thr.otherwise(0))
+
+
 def views(spark: SparkSession, sf_dir: str) -> None:
     _pin_session(spark)
     register_views(spark, sf_dir)

@@ -2,22 +2,24 @@
 
 The production dedup operators (operators/dedup.py) hash with xxhash64 —
 fast, JVM-native, but DuckDB cannot reproduce it, so their registry
-entries are rows-only P checks. These variants re-express the SAME
-algorithms over a portable 60-bit hash both engines compute identically:
+entries are rows-only P checks. The twins here run over a portable
+60-bit hash both engines compute identically:
 
     h60(s) = first 15 hex digits of md5(s), read as an integer
 
 (md5 is bit-identical everywhere; 15 hex digits = 60 bits fits BIGINT).
-All downstream arithmetic is exact integers — affine permutations mod a
-Mersenne prime in DECIMAL(38,0)/HUGEINT, bit tests, polynomial rolling
-hashes — so the DuckDB oracle matches hash-for-hash, no float anywhere
-except the quality score (mirrored op tree per queries/base.py rule 2).
-
-Scale: identical plan shapes to the xxhash64 production twins (uniform
-band-key shuffles, arrays materialized before lambda consumers per the
-CSE pitfall in SCALE.md); md5 costs more CPU per token than xxhash64,
-which is why the production path keeps xxhash64 and only these
-verification twins pay the portability tax.
+The MinHash-LSH twins (xh_minhash_lsh_pairs, xh_lsh_recall_eval,
+xh_containment_pairs, xh_ngram_novelty) CALL the production operators —
+``shingle_hashes(hash_fn=h60)``, ``minhash_signature``,
+``lsh_candidate_pairs``, ``verify_jaccard`` — so their DuckDB oracles
+check the code production runs, hash for hash. The other twins express
+their algorithms here directly. All downstream arithmetic is exact
+integers — affine permutations mod a Mersenne prime, bit tests,
+polynomial rolling hashes — so the DuckDB oracle matches hash-for-hash,
+no float anywhere except the quality score (mirrored op tree per
+queries/base.py rule 2). md5 costs more CPU per token than xxhash64,
+which is why production keeps xxhash64 and only these verification
+twins pay the portability tax.
 
 Unicode boundary (probed, pinned in tests/test_unicode_oracle.py): the
 twins hash lowercased token bytes, so they are cross-engine exact
@@ -40,17 +42,20 @@ from functools import reduce as _reduce
 
 from .base import F, tbl
 from .registry import register
-from ..operators.dedup import _minhash_params
+from ..functions.text import h60 as _h60, word_tokens
+from ..operators.dedup import (
+    _MERSENNE as _P,
+    _minhash_params,
+    lsh_candidate_pairs,
+    minhash_signature,
+    overlap_pairs,
+    shingle_hashes,
+    verify_jaccard,
+)
 
-_P = (1 << 61) - 1
 _K = 8          # signature width
 _BANDS = 4      # 4 bands x r=2: catches Jaccard >= ~0.7 with high recall
-_A, _B = _minhash_params(_K)  # same fixed RandomState(42) params as prod
-
-
-def _h60(col):
-    """Portable 60-bit hash: int(md5(s)[0:15], 16) — exact in both engines."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+_A, _B = _minhash_params(_K)  # the oracle SQL's constants: minhash_signature(k=_K)
 
 
 _H60_SQL = "('0x' || substr(md5({s}), 1, 15))::BIGINT"
@@ -101,14 +106,14 @@ def _with_tokens(d, repartition=True, normalize=False):
     and it breaks the scan-only plan shape the plan tests pin.
     """
     if repartition:
-        n = int(d.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        d = d.repartition(n, "doc_id")
+        d = _by_doc(d)
     text = nfkc_casefold(F.col("text")) if normalize else F.col("text")
-    return d.select(
-        "doc_id",
-        "text",
-        F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "").alias("tk"),
-    )
+    return d.select("doc_id", "text", word_tokens(text).alias("tk"))
+
+
+def _by_doc(d):
+    n = int(d.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    return d.repartition(n, "doc_id")
 
 
 _TOKENS_SQL = (
@@ -116,25 +121,17 @@ _TOKENS_SQL = (
 )
 
 
-def _shingle_hashes(d):
-    """doc_id, hs: distinct h60 of word 3-grams (whole doc when < 3 toks)."""
-    t = _with_tokens(d)
-    grams = F.when(
-        F.size("tk") < 3, F.array(F.concat_ws(" ", F.col("tk")))
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size("tk") - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("tk"), i),
-                F.element_at(F.col("tk"), i + F.lit(1)),
-                F.element_at(F.col("tk"), i + F.lit(2)),
-            ),
-        )
+def _shingles(d):
+    """doc_id, __shingle_hashes: the production shingling
+    (operators/dedup.shingle_hashes, 3-grams) with the portable h60 hash,
+    repartitioned on doc_id (see ``_with_tokens``) and checkpointed once —
+    every caller feeds the frame to several consumers."""
+    d = _by_doc(d.select("doc_id", "text"))
+    return (
+        shingle_hashes(d, "text", hash_fn=_h60)
+        .select("doc_id", "__shingle_hashes")
+        .localCheckpoint(eager=True)
     )
-    g = t.withColumn("__g", grams)  # materialize before the hash lambda (CSE)
-    hs = F.array_distinct(F.transform(F.col("__g"), lambda s: _h60(s)))
-    return g.select("doc_id", hs.alias("hs"))
 
 
 _SHINGLES_SQL = f"""
@@ -151,18 +148,6 @@ sh AS MATERIALIZED (
            g -> {_H60_SQL.format(s='g')})) AS hs
   FROM toks
 )"""
-
-
-def _sig_col(i: int):
-    a, b = int(_A[i]), int(_B[i])
-    return F.array_min(
-        F.transform(
-            F.col("hs"),
-            lambda h: (
-                (F.lit(a).cast("decimal(38,0)") * h + F.lit(b)) % F.lit(_P)
-            ).cast("long"),
-        )
-    ).alias(f"s{i}")
 
 
 _SIG_COLS_SQL = ",\n         ".join(
@@ -206,55 +191,21 @@ ORDER BY id_a, id_b""",
     tags=("llm", "dedup", "minhash", "oracle-twin"),
 )
 def xh_minhash_lsh_pairs(spark, sf_dir):
-    """MinHash+LSH near-dup with a full DuckDB oracle: 3-gram shingles ->
-    8-wide MinHash (affine perms mod 2^61-1, exact decimal arithmetic) ->
+    """MinHash+LSH near-dup with a full DuckDB oracle: the production
+    operators (operators/dedup.py) over h60 shingles — 3-gram shingles ->
+    8-wide MinHash (affine perms mod 2^61-1, exact long arithmetic) ->
     4 bands x r=2 -> bucket self-join -> exact shingle-set Jaccard >= 0.7
     verified with the integer test 10*inter >= 7*union (no floats).
 
-    Same plan as operators/dedup.py:106 (near_dup_pairs): one uniform
-    shuffle on the band key, verify join co-partitioned on doc_id. The
-    shingle frame feeds signature + both verify sides, so it is
-    checkpointed once (lineage cut, blocks freed with this frame's RDD).
-    """
-    d = tbl(spark, sf_dir, "documents")
-    sh = _shingle_hashes(d).localCheckpoint(eager=True)
-    sig = sh.select("doc_id", *[_sig_col(i) for i in range(_K)])
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"s{2 * b}").alias("h1"),
-                F.col(f"s{2 * b + 1}").alias("h2"),
-            )
-            for b in range(_BANDS)
-        ]
+    One uniform shuffle on the band key; the signature aggregate's
+    exchange carries map-side partial minima (one row per doc: the
+    shingle frame is doc_id-partitioned), and the verify joins read the
+    shingle frame by doc_id."""
+    sh = _shingles(tbl(spark, sf_dir, "documents"))
+    cand = lsh_candidate_pairs(
+        minhash_signature(sh, "doc_id", k=_K), "doc_id", bands=_BANDS, k=_K
     )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("bd")).select(
-        "doc_id", "bd.band", "bd.h1", "bd.h2"
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h1") == F.col("b.h1"))
-            & (F.col("a.h2") == F.col("b.h2"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    x = sh.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("__ha"))
-    y = sh.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("__hb"))
-    inter = F.size(F.array_intersect(F.col("__ha"), F.col("__hb")))
-    union_ = F.size("__ha") + F.size("__hb") - inter
-    return (
-        cand.join(x, "id_a")
-        .join(y, "id_b")
-        .filter(F.lit(10) * inter >= F.lit(7) * union_)
-        .select("id_a", "id_b", inter.alias("inter_n"), union_.alias("union_n"))
-        .orderBy("id_a", "id_b")
-    )
+    return verify_jaccard(cand, sh, "doc_id", 0.7).orderBy("id_a", "id_b")
 
 
 _SIMHASH_BITS = 32
@@ -1034,23 +985,22 @@ def xh_ngram_novelty(spark, sf_dir):
     integer-division ppm ratio (no float anywhere, hash-exact in both
     engines).
 
-    Scale shape: reuses the 3-gram h60 shingle machinery
-    (_shingle_hashes); explode -> ONE uniform shingle-hash exchange for
-    the min-doc_id aggregate; the membership join keys on the same hash
-    (Catalyst reuses the aggregate's partitioning on that side, only the
-    exploded probe re-shuffles); the per-doc rollup is one doc_id
+    Scale shape: reuses the 3-gram h60 shingles (_shingles); explode ->
+    ONE uniform shingle-hash exchange for the min-doc_id aggregate; the
+    membership join keys on the same hash (Catalyst reuses the
+    aggregate's partitioning on that side, only the exploded probe
+    re-shuffles); the per-doc rollup is one doc_id
     exchange. 'First occurrence wins' makes the score append-stable:
     growing the corpus never changes an EARLIER doc's novelty (property
     shared with xh_weighted_mix / xh_consistent_sample; asserted in
     tests/test_curation_props.py)."""
-    d = tbl(spark, sf_dir, "documents")
-    # eager localCheckpoint before the explode, same as xh_minhash_lsh_pairs:
-    # the generator otherwise collapses with the shingle projection and
-    # re-evaluates the md5 transform per consumer (measured 9 s vs 0.4 s for
-    # the explode alone at sf0.1) — and ex feeds BOTH the min-agg and the
-    # membership probe, so the barrier also stops a second full recompute
-    sh = _shingle_hashes(d).localCheckpoint(eager=True)
-    ex = sh.select("doc_id", F.explode("hs").alias("h"))
+    # the shingle checkpoint sits before the explode: the generator
+    # otherwise collapses with the shingle projection and re-evaluates the
+    # md5 transform per consumer (measured 9 s vs 0.4 s for the explode
+    # alone at sf0.1) — and ex feeds BOTH the min-agg and the membership
+    # probe, so the barrier also stops a second full recompute
+    sh = _shingles(tbl(spark, sf_dir, "documents"))
+    ex = sh.select("doc_id", F.explode("__shingle_hashes").alias("h"))
     firsts = ex.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     return (
         ex.join(firsts, "h")
@@ -1383,7 +1333,7 @@ def xh_span_dedup(spark, sf_dir):
     integer division.
 
     Scale shape: grams explode ONCE from a localCheckpoint barrier (the
-    _shingle_hashes CSE discipline); duplicated grams are ONE uniform
+    shingle_hashes CSE discipline); duplicated grams are ONE uniform
     gram-hash partial agg (HAVING >= 2 distinct docs) and the probe is a
     SEMI join on that same hash; the interval union is a per-doc window
     over dup positions only (bounded by doc length, never corpus-wide);
@@ -1766,55 +1716,12 @@ def xh_lsh_recall_eval(spark, sf_dir):
     join; the shingle frame checkpoints once and feeds signatures,
     the inverted index, and both verify sides."""
     d = tbl(spark, sf_dir, "documents").filter(F.col("doc_id") < _EVAL_MAX_ID)
-    sh = _shingle_hashes(d).localCheckpoint(eager=True)
-    sig = sh.select("doc_id", *[_sig_col(i) for i in range(_K)])
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.col(f"s{2 * b}").alias("h1"),
-                F.col(f"s{2 * b + 1}").alias("h2"),
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_structs).alias("bd")).select(
-        "doc_id", "bd.band", "bd.h1", "bd.h2"
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h1") == F.col("b.h1"))
-            & (F.col("a.h2") == F.col("b.h2"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-        .withColumn("is_cand", F.lit(True))
-    )
-    inv = sh.select("doc_id", F.explode("hs").alias("h"))
-    ia, ib = inv.alias("ia"), inv.alias("ib")
-    touch = (
-        ia.join(
-            ib,
-            (F.col("ia.h") == F.col("ib.h"))
-            & (F.col("ia.doc_id") < F.col("ib.doc_id")),
-        )
-        .select(
-            F.col("ia.doc_id").alias("id_a"), F.col("ib.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    x = sh.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("__ha"))
-    y = sh.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("__hb"))
-    inter = F.size(F.array_intersect(F.col("__ha"), F.col("__hb")))
-    union_ = F.size("__ha") + F.size("__hb") - inter
+    sh = _shingles(d)
+    cand = lsh_candidate_pairs(
+        minhash_signature(sh, "doc_id", k=_K), "doc_id", bands=_BANDS, k=_K
+    ).withColumn("is_cand", F.lit(True))
     exact = (
-        touch.join(x, "id_a")
-        .join(y, "id_b")
-        .filter(F.lit(10) * inter >= F.lit(7) * union_)
+        verify_jaccard(overlap_pairs(sh, "doc_id"), sh, "doc_id", 0.7)
         .select("id_a", "id_b")
         .withColumn("is_exact", F.lit(True))
     )
@@ -2115,25 +2022,13 @@ def xh_containment_pairs(spark, sf_dir):
     op is the measurement loop that tells you how much directional
     duplication those passes should be finding."""
     d = tbl(spark, sf_dir, "documents").filter(F.col("doc_id") < _CONT_MAX_ID)
-    sh = _shingle_hashes(d).localCheckpoint(eager=True)
-    inv = sh.select("doc_id", F.explode("hs").alias("h"))
-    ia, ib = inv.alias("ia"), inv.alias("ib")
-    touch = (
-        ia.join(
-            ib,
-            (F.col("ia.h") == F.col("ib.h"))
-            & (F.col("ia.doc_id") != F.col("ib.doc_id")),
-        )
-        .select(
-            F.col("ia.doc_id").alias("id_a"), F.col("ib.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    x = sh.select(F.col("doc_id").alias("id_a"), F.col("hs").alias("__ha"))
-    y = sh.select(F.col("doc_id").alias("id_b"), F.col("hs").alias("__hb"))
+    sh = _shingles(d)
+    x = sh.select(F.col("doc_id").alias("id_a"), F.col("__shingle_hashes").alias("__ha"))
+    y = sh.select(F.col("doc_id").alias("id_b"), F.col("__shingle_hashes").alias("__hb"))
     inter = F.size(F.array_intersect(F.col("__ha"), F.col("__hb")))
     return (
-        touch.join(x, "id_a")
+        overlap_pairs(sh, "doc_id", directed=True)
+        .join(x, "id_a")
         .join(y, "id_b")
         .select(
             "id_a",

@@ -7,7 +7,7 @@ large-scale training-data pipeline runs at 100 TB.
 
 from __future__ import annotations
 
-from .base import F, dec, tbl
+from .base import F, dec, hash_sample_by, tbl
 from .registry import register
 from ..operators.similarity import cosine_topk, lsh_ann_topk
 
@@ -515,7 +515,7 @@ def xp_training_pipeline(spark, sf_dir):
       3. exact dedup         (md5 hash-groupBy, keep lowest doc_id)
       4. near-dup removal    (Jaccard pairs -> connected components ->
                               keep each cluster's minimum-id representative)
-      5. stratified sample   (seeded per-language rates)
+      5. stratified sample   (per-language hash-threshold rates)
       6. corpus stats        (docs/tokens per language, deterministic)
 
     Every stage is one of the registered primitives (q56, xp_minhash /
@@ -567,9 +567,10 @@ def xp_training_pipeline(spark, sf_dir):
     reps = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
     curated = exact.join(reps, "doc_id")
 
-    # 5: stratified sample (seeded => deterministic for a fixed layout)
+    # 5: stratified sample — a hash threshold per row, so the kept set does
+    # not depend on the shuffle order the joins above leave behind
     fractions = {"en": 0.8, "de": 0.8, "es": 0.5, "fr": 0.5}
-    sampled = curated.sampleBy("lang", fractions, seed=7)
+    sampled = hash_sample_by(curated, "lang", fractions, key="doc_id", seed=7)
 
     # 6: per-language corpus stats
     return (

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from .base import F, tbl
 from .registry import register
+from ..functions.text import h60 as _h60
 
 # Regex patterns chosen to behave identically under Java regex (Spark) and
 # RE2 (DuckDB): character classes, bounded repetition, no backreferences,
@@ -322,12 +323,6 @@ def h_histogram(spark, sf_dir):
 
 
 _H60_SQL = "('0x' || substr(md5({s}), 1, 15))::BIGINT"
-
-
-def _h60(col):
-    """Portable 60-bit hash (int(md5[0:15],16)) — exact in both engines;
-    same construction as queries/dedup_oracle.py:_h60."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 @register(

@@ -353,7 +353,7 @@ def h_text_roundtrip(spark, sf_dir):
     saw the files. Docs are single-line by fixture construction; a real
     corpus dump would escape newlines first (that transform is q04's JSON
     path)."""
-    from .dedup_oracle import _h60
+    from ..functions.text import h60 as _h60
 
     d = tbl(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     out = scratch_dir("text_roundtrip")

@@ -1,13 +1,16 @@
-"""Per-query profiler for the r18 optimization round (guide §1).
+"""Per-query profiler for an optimization round (guide §1).
 
 For each named query: time fn() construction (which for iterative
 operators runs setup jobs), the first count() action, and a warm
 re-run (cache keys the first run inserted are evicted first, exactly
 like bench.py's warm protocol), and write the formatted physical plan
-to plans/r18/<name>_<tag>.txt.
+to plans/r<N>/<name>_<tag>.txt for ``--round N``.
 
-    python profile_r18.py xp_pagerank xh_market_basket --tag before
-    python profile_r18.py --top 15 --tag before   # slowest from last_run
+    python profile_queries.py --round 19 xp_pagerank xh_market_basket --tag before
+    python profile_queries.py --round 19 --top 15 --tag before   # slowest from last_run
+
+(Not named profile.py: that would shadow the stdlib ``profile`` module,
+which ``import pyspark`` loads through cProfile.)
 """
 
 from __future__ import annotations
@@ -34,6 +37,7 @@ from hadoop_copier_spark.session import get_spark  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
+    ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--top", type=int, default=0)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -51,10 +55,10 @@ def main() -> None:
         ]
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="hcs-profile-r18", cpus=cpus, shuffle_partitions=int(cpus))
+    spark = get_spark(app_name=f"hcs-profile-r{args.round}", cpus=cpus, shuffle_partitions=int(cpus))
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
 
-    plan_dir = os.path.join(_REPO, "plans", "r18")
+    plan_dir = os.path.join(_REPO, "plans", f"r{args.round}")
     os.makedirs(plan_dir, exist_ok=True)
     out = {}
     for name in names:

@@ -20,7 +20,10 @@ CASES = ["q24", "q35", "q63", "xh_dedup_clusters", "q45", "xh_ngram_jaccard",
          # round-7 additions, one per new risk family: FP-priority top-k
          # merged across partitions (A-ES), quantized-FP per-doc sums
          # (BM25), and window-framed FP distances (subsequence search)
-         "xh_weighted_sample", "xh_bm25", "xh_subseq_search"]
+         "xh_weighted_sample", "xh_bm25", "xh_subseq_search",
+         # the one MinHash-LSH operator, exact band keys: production
+         # (xxhash64) and the candidate-stage audit twin (h60)
+         "xp_minhash_neardup", "xh_lsh_recall_eval"]
 
 
 @pytest.mark.parametrize("name", CASES)

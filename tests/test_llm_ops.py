@@ -362,6 +362,25 @@ def test_connected_components_string_ids(spark):
     }
 
 
+def test_connected_components_string_ids_max_iter_0_collects(spark):
+    """With non-integral ids and max_iter=0 no job reads the labels before
+    the operator releases its edge and vertex checkpoints, so the labels
+    must be materialized up front — collecting the result afterwards must
+    still work (zero rounds ran: every node is its own label)."""
+    from hadoop_copier_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame(
+        spark.sparkContext.parallelize([("b", "a"), ("c", "b")], 1),
+        "src string, dst string",
+    )
+    out = connected_components(edges, max_iter=0)
+    # materialized before return: nothing it reads was released under it
+    assert out._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+    assert {r["node"]: r["comp"] for r in out.collect()} == {
+        "a": "a", "b": "b", "c": "c"
+    }
+
+
 def test_dedup_clusters_match_union_find(spark, sf_oracle):
     """h_dedup_clusters vs a driver-side union-find over the same pair set
     (independent of both the Spark propagation and the SQL oracle)."""
@@ -458,7 +477,7 @@ def test_dedup_clusters_releases_checkpoint_storage(spark, sf_oracle):
 
 
 def test_training_pipeline_deterministic_and_contracting(spark, sf_oracle):
-    """The composed curation pipeline must be deterministic (seeded sample,
+    """The composed curation pipeline must be deterministic (hash-threshold sample,
     deterministic dedup representatives) and each stage only removes rows:
     the sampled token total cannot exceed the raw corpus total."""
     from hadoop_copier_spark.queries.base import tbl
@@ -475,6 +494,37 @@ def test_training_pipeline_deterministic_and_contracting(spark, sf_oracle):
     assert sum(r[1] for r in run1) <= total_docs
     assert sum(r[2] for r in run1) <= total_tokens
     assert {r[0] for r in run1} <= {"en", "de", "es", "fr"}
+
+
+def test_stratified_sample_rates_and_repeatable(spark):
+    """xp_stratified_sample keeps each language at its declared rate
+    (within 4 binomial standard deviations) and, being a hash-threshold
+    sample of doc_id, returns equal rows on every run and under any
+    shuffle-partition count."""
+    import math
+
+    from hadoop_copier_spark.queries.base import tbl
+    from pyspark.sql import functions as F
+
+    sf = SF_DUPS
+    fractions = {"en": 0.5, "de": 0.5, "es": 0.2, "fr": 0.2, "zh": 0.1}
+    totals = dict(
+        tbl(spark, sf, "documents").groupBy("lang").agg(F.count(F.lit(1))).collect()
+    )
+    q = REGISTRY["xp_stratified_sample"]
+    run1 = [tuple(r) for r in q.fn(spark, sf).collect()]
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        run2 = [tuple(r) for r in q.fn(spark, sf).collect()]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)
+    assert run1 == run2
+    got = dict(run1)
+    assert set(got) == set(fractions)
+    for lang, f in fractions.items():
+        n = totals[lang]
+        assert abs(got[lang] - f * n) <= 4 * math.sqrt(n * f * (1 - f)), (lang, got[lang], n)
 
 
 def test_training_pipeline_stage_is_time_travelable(spark, sf_oracle):
